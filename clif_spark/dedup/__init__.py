@@ -939,6 +939,20 @@ def _bloom_positions(fp: F.Column, m_bits: int, k: int) -> F.Column:
         for seed in range(k)])
 
 
+def _bloom_probes(fp: DataFrame, m_bits: int, k: int,
+                  *keep: str) -> DataFrame:
+    """One row per probed bit of each row's ``fp`` fingerprint: the
+    ``keep`` columns plus the bit's 64-bit ``word`` (pos / 64) and its
+    single-bit ``mask`` within that word (1 << pos % 64). The bitmap
+    builds OR the masks per word (``bit_or``); the screen ANDs them
+    against the built words."""
+    pos = fp.select(*keep, F.explode(
+        _bloom_positions(F.col("fp"), m_bits, k)).alias("pos"))
+    return pos.select(*keep, (F.col("pos") / 64).cast("long").alias("word"),
+                      F.expr("shiftleft(1L, cast(pos % 64 as int))")
+                       .alias("mask"))
+
+
 def bloom_build(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text", m_bits: int | None = None,
                 k: int = 5) -> tuple[DataFrame, int]:
@@ -959,11 +973,7 @@ def bloom_build(docs: DataFrame, id_col: str = "doc_id",
         n = docs.count()
         m_bits = 1 << max(10, (16 * max(n, 1) - 1).bit_length())
     fp = docs.select(fingerprint(F.col(text_col)).alias("fp"))
-    pos = fp.select(F.explode(
-        _bloom_positions(F.col("fp"), m_bits, k)).alias("pos"))
-    bitmap = (pos.select((F.col("pos") / 64).cast("long").alias("word"),
-                         F.expr("shiftleft(1L, cast(pos % 64 as int))")
-                          .alias("mask"))
+    bitmap = (_bloom_probes(fp, m_bits, k)
               .groupBy("word").agg(F.bit_or("mask").alias("bits")))
     return bitmap, m_bits
 
@@ -980,13 +990,7 @@ def bloom_screen(delivery: DataFrame, bitmap: DataFrame, m_bits: int,
     corpus-sized anything. Output: (id, fp, flagged)."""
     fp = delivery.select(F.col(id_col),
                          fingerprint(F.col(text_col)).alias("fp"))
-    probes = fp.select(
-        id_col, "fp",
-        F.explode(_bloom_positions(F.col("fp"), m_bits, k)).alias("pos"))
-    hits = (probes
-            .withColumn("word", (F.col("pos") / 64).cast("long"))
-            .withColumn("mask",
-                        F.expr("shiftleft(1L, cast(pos % 64 as int))"))
+    hits = (_bloom_probes(fp, m_bits, k, id_col, "fp")
             .join(F.broadcast(bitmap), "word", "left")
             .withColumn("hit", (F.col("bits").isNotNull()
                                 & (F.col("bits").bitwiseAND(F.col("mask")) != 0))

@@ -2204,10 +2204,9 @@ def _bm25f_score(bcounts, acounts, materialized: bool = False):
     leg parquet scans with pushed filters and real stats — for those,
     re-planning the scan per reference is cheaper than three eager
     checkpoint jobs + block writes (A/B on the standing store at
-    sf0.1: 3.83 -> 2.92 s min, 12 -> 9 jobs —
-    scripts/bm25f_score_ab_r18.py; results bit-identical, asserted
-    there and oracle-gated in every caller). The batch-tokenize
-    callers keep the default."""
+    sf0.1: 3.83 -> 2.92 s min, 12 -> 9 jobs; results bit-identical
+    and oracle-gated in every caller). The batch-tokenize callers keep
+    the default."""
     from pyspark.sql import Window
 
     def _cut(df):
@@ -3612,9 +3611,8 @@ def web_bowtie_classes(spark, sf_dir):
     # (r17 audit). scc is already materialized, so decide from its
     # TRUE row count and key bytes (core/in/out are node subsets, so
     # the scc bound covers all three sides): measured 0.178 -> 0.138 s
-    # at sf0.1 and 0.258 -> 0.186 s at sf1 on the isolated classifier
-    # (scripts/bowtie_bcast_ab_r18.py), plan 3 SMJ -> 3 BHJ. Above the
-    # bound the honest SMJ stands.
+    # at sf0.1 and 0.258 -> 0.186 s at sf1 on the isolated classifier,
+    # plan 3 SMJ -> 3 BHJ. Above the bound the honest SMJ stands.
     n_scc, scc_bytes = scc.agg(
         F.count(F.lit(1)),
         F.sum(F.octet_length("node"))).first()

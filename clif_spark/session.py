@@ -62,14 +62,12 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
+    """Apply the engine's runtime confs to an existing session (idempotent).
+
+    A conf that fails to apply raises: every conf here changes query
+    semantics or plans, so a silent skip would change results."""
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Non-settable in this deployment; engine code paths degrade
-            # gracefully (io.py converts ts columns defensively).
-            pass
+        spark.conf.set(k, v)
     return spark
 
 

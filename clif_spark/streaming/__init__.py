@@ -1140,17 +1140,13 @@ def _lsm_bloom_build(df: DataFrame, key_col: str,
 
     The ``collect()`` here is BOUNDED by construction: m/64 <= 16384
     rows of two longs."""
-    from clif_spark.dedup import _bloom_positions
+    from clif_spark.dedup import _bloom_probes
 
     if m_bits is None:
         n = df.select(key_col).distinct().count()
         m_bits = 1 << max(10, min(20, (16 * max(n, 1) - 1).bit_length()))
     fp = df.select(F.col(key_col).cast("string").alias("fp"))
-    pos = fp.select(F.explode(
-        _bloom_positions(F.col("fp"), m_bits, _LSM_BLOOM_K)).alias("pos"))
-    words = (pos.select((F.col("pos") / 64).cast("long").alias("word"),
-                        F.expr("shiftleft(1L, cast(pos % 64 as int))")
-                         .alias("mask"))
+    words = (_bloom_probes(fp, m_bits, _LSM_BLOOM_K)
              .groupBy("word").agg(F.bit_or("mask").alias("bits"))
              .collect())
     return {"m": m_bits, "k": _LSM_BLOOM_K,

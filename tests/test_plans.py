@@ -707,6 +707,23 @@ def test_arrow_batch_byte_cap(spark):
     assert max(r.rows for r in out) <= (cap // blob_mb) + 1
 
 
+def test_configure_raises_when_a_conf_fails_to_apply():
+    """session.configure() does not swallow a failed conf set: a
+    session that refuses one (here spark.sql.ansi.enabled) would run
+    every query under different semantics, so the failure reaches the
+    caller."""
+    from types import SimpleNamespace
+
+    from clif_spark.session import configure
+
+    class RefusingConf:
+        def set(self, key, value):
+            raise RuntimeError(f"cannot modify {key}")
+
+    with pytest.raises(RuntimeError, match="spark.sql.ansi.enabled"):
+        configure(SimpleNamespace(conf=RefusingConf()))
+
+
 def test_sitemap_index_host_sized_no_python(spark):
     """web_sitemap_index: two chained block-parses are pure Catalyst
     projections over a HOST-count-sized relation — the only corpus
